@@ -142,22 +142,38 @@ def embed_many(
     return joined.withColumn(spec.path, F.coalesce(F.col(spec.path), empty))
 
 
+def variant_tables(
+    base: dict[str, DataFrame], spec: DenormalizationSpec
+) -> list[tuple[str, tuple[EmbedSpec, ...]]]:
+    """The layout's tables as (collection, embeds applied to it, in order):
+    the spec's collections (all of ``base`` if it names none).  The pair is
+    all that shapes a table's contents, so two layouts with an equal pair
+    store the same bytes."""
+    kept = [c.name for c in spec.collections] or list(base)
+    return [(name, tuple(e for e in spec.embeds if e.target == name)) for name in kept]
+
+
+def build_table(
+    base: dict[str, DataFrame], name: str, embeds: tuple[EmbedSpec, ...]
+) -> DataFrame:
+    """Collection ``name`` of ``base`` with ``embeds`` applied in order."""
+    df = base[name]
+    for e in embeds:
+        fn = embed_one if e.cardinality == "one" else embed_many
+        df = fn(df, base[e.source], e)
+    return df
+
+
 def build_variant(
     base: dict[str, DataFrame], spec: DenormalizationSpec
 ) -> dict[str, DataFrame]:
     """Materialize the layout's logical tables (reference S7
     ``build_database_models``, `challenge/loader.py:149-182`): apply every
     embed, keep only the spec's collections."""
-    out: dict[str, DataFrame] = {}
-    kept = [c.name for c in spec.collections] or list(base)
-    for name in kept:
-        df = base[name]
-        for e in spec.embeds:
-            if e.target == name:
-                fn = embed_one if e.cardinality == "one" else embed_many
-                df = fn(df, base[e.source], e)
-        out[name] = df
-    return out
+    return {
+        name: build_table(base, name, embeds)
+        for name, embeds in variant_tables(base, spec)
+    }
 
 
 def write_variant(

@@ -9,8 +9,9 @@ Reference semantics reproduced as real Spark joins:
 - O10 co-partitioned shuffle-free join (`challenge/planner.py:252-268`):
   bucketed tables -> SortMergeJoin with no Exchange; the workbench writes
   them, tests assert the plan shape.
-- O11 filter-then-join (`challenge/planner.py:224-250`): Catalyst pushes
-  predicates below joins automatically; helpers here just compose.
+- O11 filter-then-join (`challenge/planner.py:224-250`): filter the
+  dimension side, then ``dim_join`` it; Catalyst pushes any predicate
+  written after the join below it anyway.
 - O12 join-after-aggregate (`chapter5/planner.py:58-77`): the aggregated side
   is small -> explicitly broadcast the dimension side.
 - O13 multi-way filtered join (`query_simulator/queries.py:89-123`): chained
@@ -52,24 +53,6 @@ def dim_join(
     path): at 100 TB the fact side must never shuffle for a small dimension."""
     keys = [on] if isinstance(on, str) else list(on)
     return fact.join(F.broadcast(dim), on=keys, how=how)
-
-
-def filter_then_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str | Sequence[str],
-    left_filter=None,
-    right_filter=None,
-    how: str = "inner",
-) -> DataFrame:
-    """O11: per-side filters before the join.  Catalyst would push these down
-    from after the join anyway; writing them first mirrors the reference plan
-    (`challenge/planner.py:224-250`) and keeps intent obvious."""
-    if left_filter is not None:
-        left = left.filter(left_filter)
-    if right_filter is not None:
-        right = right.filter(right_filter)
-    return equi_join(left, right, on, how)
 
 
 def asof_join(

@@ -4,15 +4,26 @@ at real execution."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
+from pyspark.errors import AnalysisException
 
 from bigdatastructure_a5_spark.catalog import load_tables
 from bigdatastructure_a5_spark.examples.challenge_demo import DENORMS, WORKLOAD
+from bigdatastructure_a5_spark.operators.denormalize import (
+    build_table,
+    variant_tables,
+)
 from bigdatastructure_a5_spark.plans.sql_front import (
     parse_simple_sql,
     rewrite_for_variant,
 )
-from bigdatastructure_a5_spark.plans.workload import run_workload
+from bigdatastructure_a5_spark.plans.workload import (
+    WorkloadReport,
+    materialize_variant,
+    run_workload,
+)
 
 D1, D2, D3, D4 = DENORMS
 JOIN_SQL = WORKLOAD[1].sql
@@ -149,10 +160,98 @@ def test_substituted_star_restores_consumed_key():
 
 
 @pytest.fixture(scope="module")
-def report(spark, sf_dir, tmp_path_factory):
-    base = load_tables(spark, sf_dir, ("part", "lineitem"))
-    storage = str(tmp_path_factory.mktemp("variants"))
-    return run_workload(spark, base, DENORMS, WORKLOAD, storage)
+def base(spark, sf_dir):
+    return load_tables(spark, sf_dir, ("part", "lineitem"))
+
+
+@pytest.fixture(scope="module")
+def shared_storage(tmp_path_factory):
+    return str(tmp_path_factory.mktemp("variants"))
+
+
+@pytest.fixture(scope="module")
+def report(spark, base, shared_storage):
+    return run_workload(spark, base, DENORMS, WORKLOAD, shared_storage)
+
+
+@pytest.fixture(scope="module")
+def per_spec(spark, base, tmp_path_factory):
+    """One ``run_workload`` call per layout, so no table is shared: the
+    reports, and the storage dir each call wrote its layout under."""
+    storage = str(tmp_path_factory.mktemp("per_spec"))
+    reports = [
+        run_workload(spark, base, [spec], WORKLOAD, storage) for spec in DENORMS
+    ]
+    return reports, storage
+
+
+def _table_dirs(storage: str) -> list[str]:
+    return sorted(
+        f"{variant}/{coll}"
+        for variant in os.listdir(storage)
+        for coll in os.listdir(os.path.join(storage, variant))
+    )
+
+
+def test_shared_tables_change_no_measured_number(report, per_spec, shared_storage):
+    """D4 reuses D3's part and D1's lineitem within one call.  The same
+    files are scanned, so every (variant, query) row measures the same
+    bytes and rows as with one call per layout, and the ranking holds."""
+    reports, storage = per_spec
+
+    def measured(rows):
+        return {
+            (r.variant, r.query): (
+                r.metrics.scanned_bytes,
+                r.metrics.shuffle_bytes,
+                r.metrics.output_rows,
+            )
+            for r in rows
+        }
+
+    combined = WorkloadReport([r for rep in reports for r in rep.rows])
+    alone = measured(combined.rows)
+    assert measured(report.rows) == alone
+    assert len(alone) == len(DENORMS) * len(WORKLOAD)
+    assert [v for v, _ in report.leaderboard()] == [
+        v for v, _ in combined.leaderboard()
+    ]
+    assert _table_dirs(storage) == [
+        "D1/lineitem", "D1/part", "D2/lineitem", "D3/part", "D4/lineitem", "D4/part",
+    ]
+    assert _table_dirs(shared_storage) == [
+        "D1/lineitem", "D1/part", "D2/lineitem", "D3/part",
+    ]
+
+
+def test_explicit_schema_reread_matches_inference(spark, base, per_spec):
+    """``materialize_variant`` re-reads with the built frame's schema to
+    skip schema inference; for every D1-D4 table both reads agree."""
+    _, storage = per_spec
+    for spec in DENORMS:
+        for coll, embeds in variant_tables(base, spec):
+            path = os.path.join(storage, spec.id, coll)
+            built = build_table(base, coll, embeds)
+            inferred = spark.read.parquet(path).schema
+            assert spark.read.schema(built.schema).parquet(path).schema == inferred, (
+                spec.id,
+                coll,
+            )
+
+
+def test_omitted_collection_fails_after_shared_table(spark, base, tmp_path):
+    """D2 omits part.  A table map holding D1's part must not leave it
+    resolvable: the view is dropped and a query on it fails loudly."""
+    stored: dict = {}
+    try:
+        materialize_variant(spark, base, D1, str(tmp_path), stored)
+        assert ("part", ()) in stored
+        materialize_variant(spark, base, D2, str(tmp_path), stored)
+        with pytest.raises(AnalysisException):
+            spark.table("part")
+    finally:
+        for coll, df in base.items():
+            df.createOrReplaceTempView(coll)
 
 
 def test_workload_rows_and_totals(report):
