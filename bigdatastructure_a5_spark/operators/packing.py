@@ -79,10 +79,12 @@ def concat_and_chunk(
 
     ``base_col`` names a per-row bigint column holding the ABSOLUTE
     stream offset at which this frame's shard begins (constant within a
-    shard) — the incremental-packing hook: a streaming packer passes the
-    tokens-packed-so-far carry so batch-local cumsums land at their
-    corpus-absolute positions and ``chunk_id``s continue across batches
-    (``streaming/packing.py``).  ``None`` (batch mode) packs from 0.
+    shard), so batch-local cumsums land at corpus-absolute positions and
+    ``chunk_id``s continue from it.  ``None`` (batch mode) packs from 0.
+    It is the parity reference for ``assemble_chunks_fused(base_col=...)``
+    — the streaming assembler's (``streaming/packing.py``) base offset —
+    which tests/test_packing.py checks against this geometry joined
+    through ``assemble_chunks``.
     """
     if chunk_tokens <= 0:
         raise ValueError(f"chunk_tokens must be positive, got {chunk_tokens}")

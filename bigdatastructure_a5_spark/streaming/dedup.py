@@ -96,7 +96,7 @@ def streaming_exact_dedup(
 def _store_paths(state_dir: str) -> tuple[str, str]:
     # join_path, not pathlib: state dirs are Spark paths (hdfs://,
     # s3a://...) whose double slash pathlib would mangle — the same
-    # rule as streaming/packing's stores
+    # rule as streaming/packing's store
     from bigdatastructure_a5_spark.streaming.state import join_path
 
     return join_path(state_dir, "bands"), join_path(state_dir, "shingles")

@@ -1,39 +1,26 @@
-"""Incremental packing (streaming/packing.py): stream == batch
-equivalence for any batch split, carry persistence across chunk
-boundaries, retry idempotence of the carry store, and the real
-foreachBatch wiring."""
+"""Incremental assembly (streaming/packing.py): stream == batch
+equivalence for any batch split, per-shard state (packed total + tail)
+across chunk boundaries, retry and crash safety of the one state store,
+compaction, and the real foreachBatch wiring."""
 
 from __future__ import annotations
 
 import os
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from bigdatastructure_a5_spark.operators.packing import concat_and_chunk
 from bigdatastructure_a5_spark.streaming.packing import (
-    pack_batch,
-    read_carry,
-    streaming_pack_writer,
+    assemble_batch,
+    compact_state,
+    read_state,
+    streaming_assembly_writer,
 )
 
 L = 16
-SCHEMA = "doc_id bigint, shard bigint, n_tokens bigint"
-
-
-def _docs(spark, counts, shards=None):
-    rows = [
-        (i, (i % 2) if shards is None else shards[i], n)
-        for i, n in enumerate(counts)
-    ]
-    return spark.createDataFrame(rows, SCHEMA)
-
-
-def _batch_geo(spark, docs):
-    return sorted(
-        tuple(r)
-        for r in concat_and_chunk(docs, L, shard_col="shard").collect()
-    )
+TOK_SCHEMA = "doc_id bigint, shard bigint, toks array<string>"
 
 
 def _splits(docs, k):
@@ -50,268 +37,6 @@ def _splits(docs, k):
         lo = hi
 
 
-def test_sequential_batches_equal_batch_pack(spark, tmp_path):
-    """Three id-ordered microbatches produce EXACTLY the batch packer's
-    geometry — absolute chunk ids, identical slices — including chunks
-    that straddle a batch boundary (emitted under-full, then extended
-    by the next batch at the same chunk_id)."""
-    counts = [5, 3, 40, 1, 16, 7, 2, 31, 9, 4]
-    docs = _docs(spark, counts)
-    state, out = str(tmp_path / "state"), str(tmp_path / "out")
-    for i, b in enumerate(_splits(docs, 3)):
-        pack_batch(spark, b, state, out, L, batch_id=i)
-    got = sorted(tuple(r) for r in spark.read.parquet(out).collect())
-    assert got == _batch_geo(spark, docs) and len(got) > 0
-    # a straddle exists: some chunk_id appears in more than one batch's
-    # rows — verify by the per-chunk offsets tiling [0, L)
-    by_chunk: dict[tuple, list] = {}
-    for r in spark.read.parquet(out).collect():
-        by_chunk.setdefault((r.shard, r.chunk_id), []).append(r)
-    for (shard, cid), rs in by_chunk.items():
-        rs.sort(key=lambda r: r.chunk_offset)
-        assert rs[0].chunk_offset == 0
-        for a, b in zip(rs, rs[1:]):
-            assert a.chunk_offset + a.slice_len == b.chunk_offset
-
-
-def test_single_batch_equals_batch_pack(spark, tmp_path):
-    docs = _docs(spark, [5, 3, 40, 1, 16, 7])
-    state, out = str(tmp_path / "state1"), str(tmp_path / "out1")
-    pack_batch(spark, docs, state, out, L, batch_id=0)
-    got = sorted(tuple(r) for r in spark.read.parquet(out).collect())
-    assert got == _batch_geo(spark, docs)
-
-
-def test_carry_accumulates_per_shard(spark, tmp_path):
-    """The state is one bigint per shard: after two batches the carry is
-    each shard's total packed tokens (zero-token docs excluded)."""
-    state, out = str(tmp_path / "state2"), str(tmp_path / "out2")
-    b1 = spark.createDataFrame(
-        [(0, 0, 5), (1, 1, 7), (2, 0, 0)], SCHEMA
-    )
-    b2 = spark.createDataFrame([(3, 0, 11), (4, 1, 2)], SCHEMA)
-    pack_batch(spark, b1, state, out, L, batch_id=0)
-    pack_batch(spark, b2, state, out, L, batch_id=1)
-    carry = {
-        r.shard: r.base for r in read_carry(spark, state).collect()
-    }
-    assert carry == {0: 16, 1: 9}
-
-
-def test_retried_batch_does_not_double_count_carry(spark, tmp_path):
-    """foreachBatch retries re-run the same batch_id: the carry store
-    dedups on (shard, batch_id), so a replayed state append leaves the
-    carry unchanged — AND the re-emitted geometry is position-identical
-    (the retry packs at the same base even though the first attempt
-    already appended this batch's carry row; ADVICE r10 high).  The
-    worst case is crash between foreachBatch return and checkpoint
-    commit: geometry written, carry written, batch redelivered whole."""
-    state, out = str(tmp_path / "state3"), str(tmp_path / "out3")
-    b1 = spark.createDataFrame([(0, 0, 5), (1, 1, 7)], SCHEMA)
-    pack_batch(spark, b1, state, out, L, batch_id=0)
-    first = sorted(tuple(r) for r in spark.read.parquet(out).collect())
-    pack_batch(spark, b1, state, out, L, batch_id=0)  # retry
-    carry = {
-        r.shard: r.base for r in read_carry(spark, state).collect()
-    }
-    assert carry == {0: 5, 1: 7}
-    # geometry: every retried row is an exact duplicate of a first-attempt
-    # row — same positions, never shifted by the batch's own carry
-    after = sorted(tuple(r) for r in spark.read.parquet(out).collect())
-    assert after == sorted(first * 2)
-    assert sorted(set(after)) == first == _batch_geo(spark, b1)
-    # and a FOLLOWING batch still packs at the correct (single-count) base
-    b2 = spark.createDataFrame([(2, 0, 4)], SCHEMA)
-    pack_batch(spark, b2, state, out, L, batch_id=1)
-    doc2 = [
-        r
-        for r in spark.read.parquet(out).collect()
-        if r.doc_id == 2
-    ]
-    assert [(r.chunk_id, r.chunk_offset) for r in doc2] == [(0, 5)]
-
-
-def test_crash_between_geometry_and_carry_is_retry_safe(spark, tmp_path):
-    """Crash BETWEEN the two sinks (geometry appended, carry not yet —
-    the write order pack_batch guarantees): the retry re-packs at the
-    same base, appending position-identical duplicates, and the final
-    deduplicated geometry equals the batch packer's output.  This is
-    why geometry-before-carry is the safe order — carry-first would
-    shift the retry by the batch's own tokens (VERDICT r10 item 8)."""
-    state, out = str(tmp_path / "state5"), str(tmp_path / "out5")
-    b1 = spark.createDataFrame([(0, 0, 5), (1, 1, 7)], SCHEMA)
-    pack_batch(spark, b1, state, out, L, batch_id=0)
-    b2 = spark.createDataFrame([(2, 0, L + 3), (3, 1, 2)], SCHEMA)
-
-    # first attempt of batch 1 crashes after the geometry append, before
-    # the carry append: replicate exactly the geometry half of pack_batch
-    carry = read_carry(spark, state, before_batch_id=1)
-    withbase = b2.join(
-        F.broadcast(carry.withColumnRenamed("shard", "shard")),
-        on=["shard"],
-        how="left",
-    )
-    concat_and_chunk(
-        withbase, L, shard_col="shard", base_col="base"
-    ).write.mode("append").parquet(out)
-
-    # redelivery: the full body runs again with the same batch_id
-    pack_batch(spark, b2, state, out, L, batch_id=1)
-
-    rows = [tuple(r) for r in spark.read.parquet(out).collect()]
-    b2_rows = [r for r in rows if r[2] in (2, 3)]  # col 2 = doc_id
-    # every batch-1 row appears exactly twice, at identical positions
-    from collections import Counter
-
-    assert set(Counter(map(tuple, b2_rows)).values()) == {2}
-    # deduplicated stream == the batch packer over the whole corpus
-    both = _docs(spark, [5, 7, L + 3, 2], shards=[0, 1, 0, 1])
-    assert sorted(set(map(tuple, rows))) == _batch_geo(spark, both)
-    # carry is single-counted
-    carry2 = {r.shard: r.base for r in read_carry(spark, state).collect()}
-    assert carry2 == {0: 5 + L + 3, 1: 9}
-
-
-def test_existing_but_unreadable_state_dir_raises(spark, tmp_path):
-    """A state dir that EXISTS but fails analysis (empty dir — 'unable
-    to infer schema') must raise, not masquerade as first-batch: packing
-    from base 0 over real prior state silently overlaps chunk ids
-    (ADVICE r10).  A genuinely missing path still means first batch."""
-    import pytest
-    from pyspark.errors import AnalysisException
-
-    state = tmp_path / "state6"
-    assert read_carry(spark, str(state)) is None  # missing -> first batch
-    (state / "carry").mkdir(parents=True)  # exists, no parquet inside
-    with pytest.raises(AnalysisException):
-        read_carry(spark, str(state))
-
-
-def test_new_shard_mid_stream_starts_at_zero(spark, tmp_path):
-    """A shard first seen in batch 2 has no carry row — its stream
-    starts at position 0 (chunk_id 0), while existing shards continue."""
-    state, out = str(tmp_path / "state4"), str(tmp_path / "out4")
-    pack_batch(
-        spark,
-        spark.createDataFrame([(0, 0, L + 2)], SCHEMA),
-        state, out, L, batch_id=0,
-    )
-    pack_batch(
-        spark,
-        spark.createDataFrame([(1, 0, 3), (2, 9, 4)], SCHEMA),
-        state, out, L, batch_id=1,
-    )
-    rows = spark.read.parquet(out).collect()
-    new_shard = [r for r in rows if r.shard == 9]
-    assert [(r.chunk_id, r.slice_start, r.slice_len, r.chunk_offset) for r in new_shard] == [
-        (0, 0, 4, 0)
-    ]
-    # shard 0 continued: doc 1 lands right after doc 0's 18 tokens
-    doc1 = [r for r in rows if r.doc_id == 1]
-    assert [(r.chunk_id, r.chunk_offset) for r in doc1] == [(1, 2)]
-
-
-def test_real_streaming_run_matches_batch_pack(spark, tmp_path):
-    """The foreachBatch wiring over a real file-source stream
-    (maxFilesPerTrigger=1, AvailableNow): identical geometry to the
-    batch packer.  File arrival is forced into id order via ascending
-    mtimes (the file source admits oldest-mtime-first)."""
-    counts = [5, 3, 40, 1, 16, 7, 2, 31]
-    docs = _docs(spark, counts)
-    src = tmp_path / "src"
-    src.mkdir()
-    base_t = time.time() - 100
-    for i, b in enumerate(_splits(docs, 3)):
-        p = str(src / f"split_{i}.parquet")
-        b.coalesce(1).write.mode("overwrite").parquet(p)
-        for f in sorted(
-            os.path.join(dp, fn)
-            for dp, _, fns in os.walk(p)
-            for fn in fns
-        ):
-            os.utime(f, (base_t + i, base_t + i))
-    stream = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/*")
-    )
-    out = str(tmp_path / "out_s")
-    q = (
-        streaming_pack_writer(
-            stream,
-            str(tmp_path / "state_s"),
-            out,
-            str(tmp_path / "ckpt"),
-            L,
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = sorted(tuple(r) for r in spark.read.parquet(out).collect())
-    assert got == _batch_geo(spark, docs) and len(got) > 0
-
-
-def test_streamed_mixture_then_incremental_pack_matches_batch(spark, tmp_path):
-    """The streaming trainer path: the mixer runs UNCHANGED on each
-    microbatch (stateless projection — stream==batch is pinned in
-    test_mixture), and its copies feed the incremental packer with
-    composite order keys.  The streamed geometry must equal the batch
-    path (mix everything, pack once) row for row."""
-    from bigdatastructure_a5_spark.operators.mixture import mix_domains
-
-    docs = spark.createDataFrame(
-        [
-            (i, ("src0", "src1", "src2")[i % 3], 3 + (i * 5) % 9)
-            for i in range(30)
-        ],
-        "doc_id bigint, source string, n_tokens bigint",
-    )
-    weights = {"src0": 2.0, "src1": 0.0, "src2": 1.0}
-
-    def mix(frame):
-        return mix_domains(
-            frame, weights, domain_col="source", default_weight=0.5
-        ).select(
-            "doc_id",
-            "copy_id",
-            (F.col("doc_id") % 4).alias("shard"),
-            "n_tokens",
-        )
-
-    # batch path: mix the whole corpus, pack once
-    want = sorted(
-        tuple(r)
-        for r in concat_and_chunk(
-            mix(docs), L, id_col=["doc_id", "copy_id"], shard_col="shard"
-        ).collect()
-    )
-    # streamed path: 3 id-ordered microbatches, mixer inside the batch
-    state, out = str(tmp_path / "state_mx"), str(tmp_path / "out_mx")
-    for i, b in enumerate(_splits(docs, 3)):
-        pack_batch(
-            spark,
-            mix(b),
-            state,
-            out,
-            L,
-            batch_id=i,
-            id_col=["doc_id", "copy_id"],
-        )
-    got = sorted(tuple(r) for r in spark.read.parquet(out).collect())
-    assert got == want and len(got) > 0
-    # the dropped domain reached neither path
-    src1_ids = {r.doc_id for r in docs.filter("source = 'src1'").collect()}
-    assert src1_ids.isdisjoint({r[2] for r in got})  # col 2 = doc_id
-
-
-# ---------------------------------------------------------------------------
-# Incremental ASSEMBLY (complete chunk text at ingest)
-# ---------------------------------------------------------------------------
-
-TOK_SCHEMA = "doc_id bigint, shard bigint, toks array<string>"
-
-
 def _tok_docs(spark, counts, shards=None):
     rows = [
         (
@@ -322,6 +47,19 @@ def _tok_docs(spark, counts, shards=None):
         for i, n in enumerate(counts)
     ]
     return spark.createDataFrame(rows, TOK_SCHEMA)
+
+
+def _tok_batch(spark, rows):
+    """(doc_id, shard, n_tokens) triples -> a token batch whose doc d
+    carries tokens w{d}_0 .. w{d}_{n-1}."""
+    return spark.createDataFrame(
+        [(d, s, [f"w{d}_{j}" for j in range(n)]) for d, s, n in rows],
+        TOK_SCHEMA,
+    )
+
+
+def _words(d, lo, hi):
+    return [f"w{d}_{j}" for j in range(lo, hi)]
 
 
 def _batch_assembled(spark, docs):
@@ -351,17 +89,180 @@ def _read_out(spark, out):
     return {(r.shard, r.chunk_id): list(r.toks) for r in rows}
 
 
+def _state(spark, state_dir, before_batch_id=None):
+    """{shard: (packed, tail toks)} from read_state."""
+    return {
+        r.shard: (r.packed, list(r.toks))
+        for r in read_state(spark, state_dir, before_batch_id).collect()
+    }
+
+
+def _packed(spark, state_dir):
+    return {s: p for s, (p, _) in _state(spark, state_dir).items()}
+
+
+def _n_parquet(path):
+    return sum(
+        1
+        for dp, _, fns in os.walk(path)
+        for f in fns
+        if f.endswith(".parquet")
+    )
+
+
+def _write_ordered_splits(docs, src, k):
+    """Write k id-ordered splits of ``docs`` under ``src`` with ascending
+    mtimes — the file source admits oldest-mtime-first, so a
+    maxFilesPerTrigger=1 stream sees them as id-ordered microbatches."""
+    src.mkdir()
+    base_t = time.time() - 100
+    for i, b in enumerate(_splits(docs, k)):
+        p = str(src / f"split_{i}.parquet")
+        b.coalesce(1).write.mode("overwrite").parquet(p)
+        for f in sorted(
+            os.path.join(dp, fn)
+            for dp, _, fns in os.walk(p)
+            for fn in fns
+        ):
+            os.utime(f, (base_t + i, base_t + i))
+
+
+def test_carry_accumulates_per_shard(spark, tmp_path):
+    """The state is one row per shard: after two batches `packed` is each
+    shard's total packed tokens (zero-token docs excluded) and `toks` its
+    partial tail — empty for a shard ending exactly on a chunk boundary.
+    The state dir holds ONE store, and each batch appends one file."""
+    state, out = str(tmp_path / "state2"), str(tmp_path / "out2")
+    b1 = _tok_batch(spark, [(0, 0, 5), (1, 1, 7), (2, 0, 0)])
+    b2 = _tok_batch(spark, [(3, 0, 11), (4, 1, 2)])
+    assemble_batch(spark, b1, state, out, L, batch_id=0)
+    assert sorted(os.listdir(state)) == ["shards"]
+    assemble_batch(spark, b2, state, out, L, batch_id=1)
+    assert _state(spark, state) == {
+        0: (16, []),
+        1: (9, _words(1, 0, 7) + _words(4, 0, 2)),
+    }
+    assert sorted(os.listdir(state)) == ["shards"]
+    assert _n_parquet(os.path.join(state, "shards")) == 2
+
+
+def test_retried_batch_does_not_double_count_carry(spark, tmp_path):
+    """foreachBatch retries re-run the same batch_id: the retry reads only
+    STRICTLY EARLIER state rows, so it packs at the same base even though
+    the first attempt already appended this batch's state row (ADVICE r10
+    high), and re-appends an identical row — `packed` is counted once.
+    The worst case is a crash between foreachBatch return and checkpoint
+    commit: output written, state written, batch redelivered whole."""
+    state, out = str(tmp_path / "state3"), str(tmp_path / "out3")
+    b1 = _tok_batch(spark, [(0, 0, 20), (1, 1, 7)])
+    assemble_batch(spark, b1, state, out, L, batch_id=0)
+    first = _state(spark, state)
+    assemble_batch(spark, b1, state, out, L, batch_id=0)  # retry
+    assert _state(spark, state) == first
+    assert first == {0: (20, _words(0, 16, 20)), 1: (7, _words(1, 0, 7))}
+    # a FOLLOWING batch still packs at the single-counted position
+    b2 = _tok_batch(spark, [(2, 0, 12)])
+    assemble_batch(spark, b2, state, out, L, batch_id=1)
+    assert _read_out(spark, out)[(0, 1)] == _words(0, 16, 20) + _words(
+        2, 0, 12
+    )
+    assert _packed(spark, state) == {0: 32, 1: 7}
+
+
+def test_crash_between_geometry_and_carry_is_retry_safe(
+    spark, tmp_path, monkeypatch
+):
+    """Crash BETWEEN the two sinks (chunks written, state not yet — the
+    write order assemble_batch guarantees, VERDICT r10 item 8): no state
+    row lands, the retry re-packs at the same base, appending
+    byte-identical duplicate chunks, the deduplicated output equals the
+    batch assembler's, and `packed` is counted once."""
+    from collections import Counter
+
+    from bigdatastructure_a5_spark.streaming import packing as P
+
+    state, out = str(tmp_path / "state5"), str(tmp_path / "out5")
+    assemble_batch(
+        spark, _tok_batch(spark, [(0, 0, 5), (1, 1, 7)]), state, out, L,
+        batch_id=0,
+    )
+    b2 = _tok_batch(spark, [(2, 0, L + 3), (3, 1, 2)])
+
+    # first attempt of batch 1 crashes right after its output write
+    real_write = P._write_output
+
+    def write_then_crash(*args, **kwargs):
+        real_write(*args, **kwargs)
+        raise RuntimeError("simulated crash after output")
+
+    monkeypatch.setattr(P, "_write_output", write_then_crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        assemble_batch(spark, b2, state, out, L, batch_id=1)
+    monkeypatch.undo()
+    assert _packed(spark, state) == {0: 5, 1: 7}  # no state row landed
+
+    # redelivery: the full body runs again with the same batch_id
+    assemble_batch(spark, b2, state, out, L, batch_id=1)
+
+    rows = [
+        (r.shard, r.chunk_id, tuple(r.toks))
+        for r in spark.read.parquet(out).collect()
+    ]
+    # every emitted row appears exactly twice, byte-identical
+    assert set(Counter(rows).values()) == {2} and len(rows) > 0
+    both = _tok_docs(spark, [5, 7, L + 3, 2], shards=[0, 1, 0, 1])
+    want_complete, want_tails = _batch_assembled(spark, both)
+    assert _read_out(spark, out) == want_complete
+    assert _state(spark, state) == {
+        s: (n, want_tails.get(s, []))
+        for s, n in {0: 5 + L + 3, 1: 9}.items()
+    }
+
+
+def test_existing_but_unreadable_state_dir_raises(spark, tmp_path):
+    """A state dir that EXISTS but fails analysis (empty dir — 'unable
+    to infer schema') must raise, not masquerade as first-batch: packing
+    from base 0 over real prior state silently overlaps chunk ids
+    (ADVICE r10).  A genuinely missing path still means first batch."""
+    from pyspark.errors import AnalysisException
+
+    state = tmp_path / "state6"
+    assert read_state(spark, str(state)) is None  # missing -> first batch
+    (state / "shards").mkdir(parents=True)  # exists, no parquet inside
+    with pytest.raises(AnalysisException):
+        read_state(spark, str(state))
+
+
+def test_new_shard_mid_stream_starts_at_zero(spark, tmp_path):
+    """A shard first seen in batch 2 has no state row — its stream
+    starts at position 0 (chunk_id 0), while existing shards continue."""
+    state, out = str(tmp_path / "state4"), str(tmp_path / "out4")
+    assemble_batch(
+        spark, _tok_batch(spark, [(0, 0, L + 2)]), state, out, L,
+        batch_id=0,
+    )
+    assemble_batch(
+        spark, _tok_batch(spark, [(1, 0, 14), (2, 9, L + 1)]), state, out,
+        L, batch_id=1,
+    )
+    assert _read_out(spark, out) == {
+        (0, 0): _words(0, 0, L),
+        # shard 0 continued: doc 1 lands right after doc 0's 18 tokens
+        (0, 1): _words(0, L, L + 2) + _words(1, 0, 14),
+        (9, 0): _words(2, 0, L),
+    }
+    assert _state(spark, state) == {
+        0: (32, []),
+        9: (L + 1, _words(2, L, L + 1)),
+    }
+
+
 def test_incremental_assembly_equals_batch_for_any_split(spark, tmp_path):
     """Streamed COMPLETE chunks (text, absolute ids) equal the batch
     assembler's complete chunks for 1- and 3-way splits — including
     chunks straddling batch boundaries (emitted once, by the batch that
     completes them) — and the final stored tail equals the batch path's
     partial last chunk per shard."""
-    from bigdatastructure_a5_spark.streaming.packing import (
-        assemble_batch,
-        read_tails,
-    )
-
     counts = [5, 3, 40, 1, 16, 7, 2, 31, 9, 4]
     docs = _tok_docs(spark, counts)
     want_complete, want_tails = _batch_assembled(spark, docs)
@@ -374,28 +275,22 @@ def test_incremental_assembly_equals_batch_for_any_split(spark, tmp_path):
             assemble_batch(spark, b, state, out, L, batch_id=i)
         assert _read_out(spark, out) == want_complete
         got_tails = {
-            r.shard: list(r.toks)
-            for r in read_tails(spark, state).collect()
-            if r.toks
+            s: toks for s, (_, toks) in _state(spark, state).items() if toks
         }
         assert got_tails == want_tails
 
 
 def test_incremental_assembly_never_emits_partial_chunks(spark, tmp_path):
     """Every emitted row is exactly L tokens — the unfilled last chunk
-    stays in the tail store (training data is fixed-size by
+    stays in the state row's tail (training data is fixed-size by
     construction), and a later batch completes it at the same absolute
     chunk_id with the earlier batch's tokens in front."""
-    from bigdatastructure_a5_spark.streaming.packing import assemble_batch
-
     state, out = str(tmp_path / "st_p"), str(tmp_path / "out_p")
     # batch 0: 10 tokens on shard 0 — no complete chunk yet (L=16)
     b0 = spark.createDataFrame(
         [(0, 0, [f"a{j}" for j in range(10)])], TOK_SCHEMA
     )
     assemble_batch(spark, b0, state, out, L, batch_id=0)
-    import os
-
     assert not any(
         f.endswith(".parquet") and os.path.getsize(os.path.join(dp, f)) > 0
         for dp, _, fns in os.walk(out)
@@ -416,13 +311,8 @@ def test_incremental_assembly_never_emits_partial_chunks(spark, tmp_path):
 def test_incremental_assembly_retry_is_position_identical(spark, tmp_path):
     """A redelivered batch re-emits byte-identical complete chunks (same
     ids, same token arrays) and leaves the tail single-valued — the
-    strictly-earlier-batch_id rule applied to BOTH state stores."""
+    strictly-earlier-batch_id rule applied to the state store."""
     from collections import Counter
-
-    from bigdatastructure_a5_spark.streaming.packing import (
-        assemble_batch,
-        read_tails,
-    )
 
     state, out = str(tmp_path / "st_r"), str(tmp_path / "out_r")
     b0 = spark.createDataFrame(
@@ -436,8 +326,9 @@ def test_incremental_assembly_retry_is_position_identical(spark, tmp_path):
     ]
     assert set(Counter(rows).values()) == {2}  # exact duplicates only
     assert {(s, c) for s, c, _ in rows} == {(0, 0)}
-    tails = {r.shard: list(r.toks) for r in read_tails(spark, state).collect()}
-    assert tails == {0: [f"a{j}" for j in range(16, 20)]}
+    assert _state(spark, state) == {
+        0: (20, [f"a{j}" for j in range(16, 20)])
+    }
     # follow-up batch still packs at the single-counted position
     b1 = spark.createDataFrame(
         [(1, 0, [f"b{j}" for j in range(12)])], TOK_SCHEMA
@@ -452,25 +343,11 @@ def test_incremental_assembly_retry_is_position_identical(spark, tmp_path):
 def test_incremental_assembly_real_streaming_run(spark, tmp_path):
     """The foreachBatch wiring over a real file-source stream: identical
     complete chunks to the batch assembler."""
-    from bigdatastructure_a5_spark.streaming.packing import (
-        streaming_assembly_writer,
-    )
-
     counts = [5, 3, 40, 1, 16, 7, 2, 31]
     docs = _tok_docs(spark, counts)
     want_complete, _ = _batch_assembled(spark, docs)
     src = tmp_path / "asrc"
-    src.mkdir()
-    base_t = time.time() - 100
-    for i, b in enumerate(_splits(docs, 3)):
-        p = str(src / f"split_{i}.parquet")
-        b.coalesce(1).write.mode("overwrite").parquet(p)
-        for f in sorted(
-            os.path.join(dp, fn)
-            for dp, _, fns in os.walk(p)
-            for fn in fns
-        ):
-            os.utime(f, (base_t + i, base_t + i))
+    _write_ordered_splits(docs, src, 3)
     stream = (
         spark.readStream.schema(TOK_SCHEMA)
         .option("maxFilesPerTrigger", 1)
@@ -495,17 +372,10 @@ def test_incremental_assembly_real_streaming_run(spark, tmp_path):
 def test_compaction_preserves_stream_semantics(spark, tmp_path):
     """compact_state folds pre-N state rows into sentinel (-1) rows —
     continuing the stream across a compaction must produce EXACTLY the
-    uncompacted run's output: same geometry, same assembled chunks,
-    same carry, same tails.  The sentinel sorts strictly below every
-    real batch id, so the strictly-earlier retry rule is untouched —
-    a retry of the first post-compaction batch re-packs at the same
-    base."""
-    from bigdatastructure_a5_spark.streaming.packing import (
-        assemble_batch,
-        compact_state,
-        read_tails,
-    )
-
+    uncompacted run's output: same assembled chunks, same packed totals,
+    same tails.  The sentinel sorts strictly below every real batch id,
+    so the strictly-earlier retry rule is untouched — a retry of the
+    first post-compaction batch re-packs at the same base."""
     counts = [5, 3, 40, 1, 16, 7, 2, 31, 9, 4, 12, 29]
     tdocs = _tok_docs(spark, counts)
     batches = list(_splits(tdocs, 4))
@@ -521,8 +391,8 @@ def test_compaction_preserves_stream_semantics(spark, tmp_path):
         assemble_batch(spark, b, st_b, out_b, L, batch_id=i)
     compact_state(spark, st_b, before_batch_id=2)
     # sentinel rows exist, real pre-cut rows are gone
-    carry_rows = spark.read.parquet(str(tmp_path / "sb" / "carry"))
-    assert {r.batch_id for r in carry_rows.collect()} == {-1}
+    rows = spark.read.parquet(str(tmp_path / "sb" / "shards"))
+    assert {r.batch_id for r in rows.collect()} == {-1}
     # retry of the first post-compaction batch: same base either way
     assemble_batch(spark, batches[2], st_b, out_b, L, batch_id=2)
     assemble_batch(spark, batches[2], st_b, out_b, L, batch_id=2)  # retry
@@ -531,50 +401,26 @@ def test_compaction_preserves_stream_semantics(spark, tmp_path):
     got_a = _read_out(spark, out_a)
     got_b = _read_out(spark, out_b)  # retry dups collapse in the dict
     assert got_b == got_a and len(got_a) > 0
-    tails_a = {
-        r.shard: list(r.toks) for r in read_tails(spark, st_a).collect()
-    }
-    tails_b = {
-        r.shard: list(r.toks) for r in read_tails(spark, st_b).collect()
-    }
-    assert tails_b == tails_a
-    carry_a = {
-        r.shard: r.base for r in read_carry(spark, st_a).collect()
-    }
-    carry_b = {
-        r.shard: r.base for r in read_carry(spark, st_b).collect()
-    }
-    assert carry_b == carry_a
+    assert _state(spark, st_b) == _state(spark, st_a)
 
 
 def test_compaction_shrinks_state_files(spark, tmp_path):
     """The point of the maintenance pass (EXPERIMENTS §20): after many
     appends the store is many files; compaction collapses the pre-cut
-    history to one row-set."""
-    import os
-
-    from bigdatastructure_a5_spark.streaming.packing import compact_state
-
+    history to one row-set without changing what read_state returns."""
     state, out = str(tmp_path / "st"), str(tmp_path / "out")
     for i in range(6):
-        b = spark.createDataFrame([(i, 0, 7), (100 + i, 1, 9)], SCHEMA)
-        pack_batch(spark, b, state, out, L, batch_id=i)
+        b = _tok_batch(spark, [(i, 0, 7), (100 + i, 1, 9)])
+        assemble_batch(spark, b, state, out, L, batch_id=i)
 
-    def n_files(p):
-        return sum(
-            1
-            for dp, _, fns in os.walk(p)
-            for f in fns
-            if f.endswith(".parquet")
-        )
-
-    carry_dir = os.path.join(state, "carry")
-    before = n_files(carry_dir)
+    store = os.path.join(state, "shards")
+    before = _n_parquet(store)
+    want = _state(spark, state)
     compact_state(spark, state, before_batch_id=6)
-    after = n_files(carry_dir)
-    assert after < before
-    carry = {r.shard: r.base for r in read_carry(spark, state).collect()}
-    assert carry == {0: 6 * 7, 1: 6 * 9}
+    after = _n_parquet(store)
+    assert after < before == 6
+    assert _state(spark, state) == want
+    assert _packed(spark, state) == {0: 6 * 7, 1: 6 * 9}
 
 
 def test_exactly_once_output_mode_retry_produces_no_duplicates(
@@ -582,28 +428,9 @@ def test_exactly_once_output_mode_retry_produces_no_duplicates(
 ):
     """exactly_once=True: each batch's output overwrites its own
     out_dir/batch=<id> directory, so a redelivered batch leaves ZERO
-    duplicate rows — and the union over batch dirs equals the default
-    append mode's deduplicated stream for both the packer and the
-    assembler."""
-    from bigdatastructure_a5_spark.streaming.packing import assemble_batch
-
+    duplicate rows — and the union over batch dirs equals the batch
+    assembler's complete chunks."""
     counts = [5, 3, 40, 1, 16, 7, 2, 31]
-    # packer
-    docs = _docs(spark, counts)
-    state, out = str(tmp_path / "st_eo"), str(tmp_path / "out_eo")
-    for i, b in enumerate(_splits(docs, 3)):
-        pack_batch(spark, b, state, out, L, batch_id=i, exactly_once=True)
-        if i == 1:  # redeliver mid-stream
-            pack_batch(
-                spark, b, state, out, L, batch_id=i, exactly_once=True
-            )
-    rows = [
-        tuple(r)
-        for r in spark.read.parquet(out).drop("batch").collect()
-    ]
-    assert len(rows) == len(set(rows))  # no duplicates despite the retry
-    assert sorted(rows) == _batch_geo(spark, docs)
-    # assembler
     tdocs = _tok_docs(spark, counts)
     want_complete, _ = _batch_assembled(spark, tdocs)
     astate, aout = str(tmp_path / "ast_eo"), str(tmp_path / "aout_eo")
@@ -611,7 +438,7 @@ def test_exactly_once_output_mode_retry_produces_no_duplicates(
         assemble_batch(
             spark, b, astate, aout, L, batch_id=i, exactly_once=True
         )
-        if i == 0:
+        if i in (0, 1):  # redeliver, incl. mid-stream
             assemble_batch(
                 spark, b, astate, aout, L, batch_id=i, exactly_once=True
             )
@@ -630,10 +457,10 @@ def test_join_path_preserves_uri_authority():
     assert join_path("s3a://bucket/out", "batch=3") == (
         "s3a://bucket/out/batch=3"
     )
-    assert join_path("hdfs://nn:8020/state", "carry") == (
-        "hdfs://nn:8020/state/carry"
+    assert join_path("hdfs://nn:8020/state", "shards") == (
+        "hdfs://nn:8020/state/shards"
     )
-    assert join_path("/tmp/x/", "tails") == "/tmp/x/tails"
+    assert join_path("/tmp/x/", "shards") == "/tmp/x/shards"
 
 
 def test_interrupted_compaction_raises_instead_of_first_batch(
@@ -641,30 +468,30 @@ def test_interrupted_compaction_raises_instead_of_first_batch(
 ):
     """A crash between compact_state's delete and rename leaves the
     store missing with a completed .compacting dir beside it: the state
-    readers must RAISE (packing from base 0 over real history silently
+    reader must RAISE (packing from base 0 over real history silently
     overlaps chunk ids), and re-running compact_state must complete the
     swap."""
-    import os
-
-    import pytest
-
-    from bigdatastructure_a5_spark.streaming.packing import compact_state
-
     state, out = str(tmp_path / "st_ic"), str(tmp_path / "out_ic")
     for i in range(3):
-        b = spark.createDataFrame([(i, 0, 7)], SCHEMA)
-        pack_batch(spark, b, state, out, L, batch_id=i)
-    carry_dir = os.path.join(state, "carry")
+        assemble_batch(
+            spark, _tok_batch(spark, [(i, 0, 7)]), state, out, L,
+            batch_id=i,
+        )
+    store = os.path.join(state, "shards")
     # simulate the crash window: store gone, staging (with _SUCCESS,
     # since every Spark parquet write leaves one) in its place
-    os.rename(carry_dir, carry_dir + ".compacting")
+    os.rename(store, store + ".compacting")
     with pytest.raises(RuntimeError, match="compact_state"):
-        read_carry(spark, state)
+        read_state(spark, state)
+    with pytest.raises(RuntimeError, match="compact_state"):
+        assemble_batch(
+            spark, _tok_batch(spark, [(3, 0, 7)]), state, out, L,
+            batch_id=3,
+        )
     # repair path: compact_state recovers the staging dir first
     compact_state(spark, state, before_batch_id=3)
-    carry = {r.shard: r.base for r in read_carry(spark, state).collect()}
-    assert carry == {0: 21}
-    rows = spark.read.parquet(carry_dir).collect()
+    assert _packed(spark, state) == {0: 21}
+    rows = spark.read.parquet(store).collect()
     assert {r.batch_id for r in rows} == {-1}
 
 
@@ -673,18 +500,12 @@ def test_assembler_supports_integer_token_id_arrays(spark, tmp_path):
     empty-tail placeholder must use the batch's own element type — a
     hardcoded array<string> fails the first time a shard ends exactly
     on a chunk boundary."""
-    from bigdatastructure_a5_spark.streaming.packing import (
-        assemble_batch,
-        read_tails,
-    )
-
     schema = "doc_id bigint, shard bigint, toks array<bigint>"
     state, out = str(tmp_path / "st_int"), str(tmp_path / "out_int")
     # batch 0 ends EXACTLY on the chunk boundary -> empty tail row
     b0 = spark.createDataFrame([(0, 0, list(range(L)))], schema)
     assemble_batch(spark, b0, state, out, L, batch_id=0)
-    tails = {r.shard: list(r.toks) for r in read_tails(spark, state).collect()}
-    assert tails == {0: []}
+    assert _state(spark, state) == {0: (L, [])}
     # batch 1 continues at the boundary; absolute chunk ids carry on
     b1 = spark.createDataFrame([(1, 0, list(range(100, 100 + L + 3)))], schema)
     assemble_batch(spark, b1, state, out, L, batch_id=1)
@@ -696,8 +517,9 @@ def test_assembler_supports_integer_token_id_arrays(spark, tmp_path):
         (0, 0): list(range(L)),
         (0, 1): list(range(100, 100 + L)),
     }
-    tails = {r.shard: list(r.toks) for r in read_tails(spark, state).collect()}
-    assert tails == {0: list(range(100 + L, 100 + L + 3))}
+    assert _state(spark, state) == {
+        0: (2 * L + 3, list(range(100 + L, 100 + L + 3)))
+    }
 
 
 def test_pack_compaction_vs_writer_mutual_exclusion(spark, tmp_path):
@@ -705,9 +527,6 @@ def test_pack_compaction_vs_writer_mutual_exclusion(spark, tmp_path):
     enforced, not documented — a compaction attempted during an active
     writer raises, a write during a compaction raises, and force=True
     overrides a mark left by a provably crashed batch."""
-    import pytest
-
-    from bigdatastructure_a5_spark.streaming.packing import compact_state
     from bigdatastructure_a5_spark.streaming.state import (
         COMPACTION_LOCK,
         WRITER_MARK,
@@ -717,12 +536,8 @@ def test_pack_compaction_vs_writer_mutual_exclusion(spark, tmp_path):
     )
 
     state, out = str(tmp_path / "st_mx"), str(tmp_path / "out_mx")
-    pack_batch(
-        spark,
-        spark.createDataFrame([(0, 0, 5), (1, 1, 7)], SCHEMA),
-        state,
-        out,
-        L,
+    assemble_batch(
+        spark, _tok_batch(spark, [(0, 0, 5), (1, 1, 7)]), state, out, L,
         batch_id=0,
     )
 
@@ -736,47 +551,32 @@ def test_pack_compaction_vs_writer_mutual_exclusion(spark, tmp_path):
     # compaction in flight -> writer refuses, and marks don't linger
     fs_mkdirs(spark, join_path(state, COMPACTION_LOCK))
     with pytest.raises(RuntimeError, match="compacted"):
-        pack_batch(
-            spark,
-            spark.createDataFrame([(2, 0, 3)], SCHEMA),
-            state,
-            out,
-            L,
+        assemble_batch(
+            spark, _tok_batch(spark, [(2, 0, 3)]), state, out, L,
             batch_id=1,
         )
     assert not os.path.exists(os.path.join(state, WRITER_MARK))
     fs_delete(spark, join_path(state, COMPACTION_LOCK))
 
     # after both sides release, the stream continues at correct offsets
-    pack_batch(
-        spark,
-        spark.createDataFrame([(2, 0, 3)], SCHEMA),
-        state,
-        out,
-        L,
-        batch_id=1,
+    assemble_batch(
+        spark, _tok_batch(spark, [(2, 0, 3)]), state, out, L, batch_id=1
     )
-    carry = {r.shard: r.base for r in read_carry(spark, state).collect()}
-    assert carry == {0: 8, 1: 7}
+    assert _state(spark, state) == {
+        0: (8, _words(0, 0, 5) + _words(2, 0, 3)),
+        1: (7, _words(1, 0, 7)),
+    }
 
 
 def test_compact_state_refuses_uncommitted_batches(spark, tmp_path):
     """ADVICE r11 medium: with the stream's checkpoint_dir given,
     compact_state enforces before_batch_id <= last COMMITTED batch + 1 —
-    folding a pending batch's carry into the sentinel would let its
-    redelivery pack at base + its own tokens."""
-    import pytest
-
-    from bigdatastructure_a5_spark.streaming.packing import compact_state
-
+    folding a pending batch's state row into the sentinel would let its
+    redelivery pack at its own end."""
     state, out = str(tmp_path / "st_cb"), str(tmp_path / "out_cb")
     for i in range(3):
-        pack_batch(
-            spark,
-            spark.createDataFrame([(i, 0, 7)], SCHEMA),
-            state,
-            out,
-            L,
+        assemble_batch(
+            spark, _tok_batch(spark, [(i, 0, 7)]), state, out, L,
             batch_id=i,
         )
     # checkpoint with commit markers for batches 0 and 1 only: batch 2
@@ -795,10 +595,13 @@ def test_compact_state_refuses_uncommitted_batches(spark, tmp_path):
     compact_state(
         spark, state, before_batch_id=2, checkpoint_dir=str(ckpt)
     )
-    rows = spark.read.parquet(os.path.join(state, "carry")).collect()
+    rows = spark.read.parquet(os.path.join(state, "shards")).collect()
     assert {r.batch_id for r in rows} == {-1, 2}
-    carry = {r.shard: r.base for r in read_carry(spark, state).collect()}
-    assert carry == {0: 21}
+    assert _packed(spark, state) == {0: 21}
+    # batch 2's redelivery still sees batch 1's state as its base
+    assert _state(spark, state, before_batch_id=2) == {
+        0: (14, _words(0, 0, 7) + _words(1, 0, 7))
+    }
     # an empty/missing commits log means NOTHING may fold
     ckpt2 = tmp_path / "ckpt_cb2"
     ckpt2.mkdir()
@@ -812,11 +615,8 @@ def test_assemble_batch_rejects_non_numeric_ids(spark, tmp_path):
     """ADVICE r11 medium: a non-numeric string id would cast to NULL and
     tie every doc on one NULL order key — nondeterministic chunk content
     across retries.  The assembler must fail loudly instead."""
-    import pytest
     from py4j.protocol import Py4JJavaError
     from pyspark.errors import SparkRuntimeException
-
-    from bigdatastructure_a5_spark.streaming.packing import assemble_batch
 
     b = spark.createDataFrame(
         [("doc-a", 0, ["t1", "t2"]), ("doc-b", 0, ["t3"])],
@@ -854,33 +654,19 @@ def test_compact_bound_reads_real_streaming_checkpoint(spark, tmp_path):
     0-2, compact_state accepts before_batch_id <= 3 and refuses 4 — and
     continuing with a batch-mode backfill over the compacted state packs
     at the exact uncompacted offsets."""
-    import pytest
-
-    from bigdatastructure_a5_spark.streaming.packing import compact_state
-
     counts = [5, 3, 40, 1, 16, 7, 2, 31]
-    docs = _docs(spark, counts)
+    docs = _tok_docs(spark, counts)
     src = tmp_path / "src_cb"
-    src.mkdir()
-    base_t = time.time() - 100
-    for i, b in enumerate(_splits(docs, 3)):
-        p = str(src / f"split_{i}.parquet")
-        b.coalesce(1).write.mode("overwrite").parquet(p)
-        for f in sorted(
-            os.path.join(dp, fn)
-            for dp, _, fns in os.walk(p)
-            for fn in fns
-        ):
-            os.utime(f, (base_t + i, base_t + i))
+    _write_ordered_splits(docs, src, 3)
     stream = (
-        spark.readStream.schema(SCHEMA)
+        spark.readStream.schema(TOK_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src) + "/*")
     )
     out, state = str(tmp_path / "out_cb"), str(tmp_path / "state_cb")
     ckpt = str(tmp_path / "ckpt_cb")
     q = (
-        streaming_pack_writer(stream, state, out, ckpt, L)
+        streaming_assembly_writer(stream, state, out, ckpt, L)
         .trigger(availableNow=True)
         .start()
     )
@@ -891,28 +677,27 @@ def test_compact_bound_reads_real_streaming_checkpoint(spark, tmp_path):
     # before_batch_id=None derives the committed prefix (3) itself —
     # the one-liner maintenance-window form
     compact_state(spark, state, checkpoint_dir=ckpt)
-    rows = spark.read.parquet(os.path.join(state, "carry")).collect()
+    rows = spark.read.parquet(os.path.join(state, "shards")).collect()
     assert {r.batch_id for r in rows} == {-1}
 
     # backfill continues at the exact offsets the full corpus implies
-    extra = spark.createDataFrame([(100, 0, 9), (101, 1, 4)], SCHEMA)
-    pack_batch(spark, extra, state, out, L, batch_id=3)
-    got = sorted(tuple(r) for r in spark.read.parquet(out).collect())
-    want = _batch_geo(
+    extra = _tok_batch(spark, [(100, 0, 9), (101, 1, 4)])
+    assemble_batch(spark, extra, state, out, L, batch_id=3)
+    want_complete, want_tails = _batch_assembled(
         spark, docs.unionByName(extra)
     )
-    assert got == want
+    out_rows = spark.read.parquet(out).collect()
+    assert len(out_rows) == len(want_complete)
+    assert _read_out(spark, out) == want_complete
+    assert {s: t for s, (_, t) in _state(spark, state).items()} == want_tails
 
 
 def test_assemble_batch_rejects_null_ids(spark, tmp_path):
     """ADVICE r12 low: NULL ids are the same hazard as uncastable ones
     (every NULL row would collapse onto one NULL order key) — the guard
     must fire on them too, with a NULL-specific message."""
-    import pytest
     from py4j.protocol import Py4JJavaError
     from pyspark.errors import SparkRuntimeException
-
-    from bigdatastructure_a5_spark.streaming.packing import assemble_batch
 
     b = spark.createDataFrame(
         [(None, 0, ["t1", "t2"]), (7, 0, ["t3"])],
@@ -931,67 +716,25 @@ def test_assemble_batch_rejects_null_ids(spark, tmp_path):
         )
 
 
-def test_assembly_carry_rows_match_raw_batch_totals(spark, tmp_path):
-    """Large batches DERIVE the carry delta from the persisted assembly
-    (sum of chunk n_tokens minus the re-packed tail length) instead of a
-    second aggregation over the raw batch (r14: for a real ingest the
-    re-aggregation re-reads and re-tokenizes every document just to
-    size() its token array).  The derivation must stay bit-identical to
-    the raw-batch totals: same (shard, batch_id) row set — a shard whose
-    only activity is its re-packed tail contributes no new tokens and
-    writes NO carry row — the same per-batch added values, and IDENTICAL
-    output chunks, for the same batch sequence run through both paths."""
-    from bigdatastructure_a5_spark.streaming.packing import assemble_batch
+def test_assemble_batch_rejects_mid_chunk_state_base(spark, tmp_path):
+    """A state row whose packed - size(toks) is not a chunk boundary
+    (here packed=5 with an empty tail) would make the shard re-pack from
+    mid-chunk: its first and last chunks both come out partial and the
+    written `packed` would silently lose tokens.  The state aggregation
+    counts partial chunks per shard and raises on more than one."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import SparkRuntimeException
 
-    # batch 0: shard 0 gets 10 tokens (partial tail), shard 1 gets 20
-    # (one complete chunk + a 4-token tail, L=16)
-    # batch 1: shard 1 ONLY — shard 0's tail is re-packed but adds 0
-    # batch 2: shard 0 resumes (9 + 3 tokens)
-    batches = [
-        [(0, 0, 10), (1, 1, 20)],
-        [(2, 1, 7)],
-        [(3, 0, 9), (4, 0, 3)],
-    ]
-    expect = {}
-    for i, rows in enumerate(batches):
-        for _, s, n in rows:
-            expect[(s, i)] = expect.get((s, i), 0) + n
-    carries, outs = [], []
-    for mode, label in ((True, "derived"), (None, "auto_raw")):
-        state = str(tmp_path / f"st_{label}")
-        out = str(tmp_path / f"out_{label}")
-        for i, rows in enumerate(batches):
-            b = spark.createDataFrame(
-                [
-                    (d, s, [f"w{d}_{j}" for j in range(n)])
-                    for d, s, n in rows
-                ],
-                TOK_SCHEMA,
-            )
-            assemble_batch(
-                spark, b, state, out, L,
-                batch_id=i, carry_from_assembly=mode,
-            )
-        carries.append({
-            (r.shard, r.batch_id): r.added
-            for r in spark.read.parquet(
-                os.path.join(state, "carry")
-            ).collect()
-        })
-        outs.append(_read_out(spark, out))
-    # no (shard=0, batch_id=1) row: tail-only shards add nothing —
-    # on BOTH paths, which also agree with the raw per-batch totals
-    assert carries[0] == carries[1] == expect
-    assert outs[0] == outs[1]
-
-
-def test_assembly_carry_strategy_is_size_adaptive(spark):
-    """The derive-vs-reaggregate cutover follows the batch's own size
-    estimate, not the box: tiny batches re-aggregate (cheapest), and the
-    unknown-stats sentinel must never be read as 'large'."""
-    from bigdatastructure_a5_spark.streaming import packing as P
-
-    tiny = spark.createDataFrame([(0, 0, ["a", "b"])], TOK_SCHEMA)
-    assert P._carry_from_assembly(tiny, None) is False
-    assert P._carry_from_assembly(tiny, True) is True
-    assert P._carry_from_assembly(tiny, False) is False
+    state, out = str(tmp_path / "st_mp"), str(tmp_path / "out_mp")
+    spark.createDataFrame(
+        [(0, 0, 5, [])],
+        "shard bigint, batch_id bigint, packed bigint, toks array<string>",
+    ).write.parquet(os.path.join(state, "shards"))
+    with pytest.raises(
+        (SparkRuntimeException, Py4JJavaError),
+        match="more than one partial chunk",
+    ):
+        assemble_batch(
+            spark, _tok_batch(spark, [(1, 0, L + 4)]), state, out, L,
+            batch_id=1,
+        )

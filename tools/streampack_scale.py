@@ -1,15 +1,15 @@
-"""Incremental packing/assembly: per-batch cost vs stream HISTORY.
+"""Incremental assembly: per-batch cost vs stream HISTORY.
 
-The parquet state stores behind streaming/packing.py are tiny per batch
-(one carry row per shard; one tail row per shard), but they are
-APPEND-ONLY: batch N's read_carry scans N-1 earlier row-sets, so the
+The parquet state store behind streaming/packing.py is tiny per batch
+(one row per touched shard: packed total + partial-chunk tail), but it
+is APPEND-ONLY: batch N's read_state scans N-1 earlier row-sets, so the
 per-batch cost has a slowly-growing term linear in BATCH COUNT (not in
 corpus size).  This tool measures that term directly: K constant-size
-microbatches through ``pack_batch`` and ``assemble_batch``, per-batch
-wall recorded, early-window vs late-window medians compared — the
-honest price of "plain parquet state, no state-store provider", and
-the number that says when a deployment should compact the carry store
-(fold rows with batch_id < N into one sentinel row per shard).
+microbatches through ``assemble_batch``, per-batch wall recorded,
+early-window vs late-window medians compared — the honest price of
+"plain parquet state, no state-store provider", and the number that
+says when a deployment should compact the state store (fold rows with
+batch_id < N into one sentinel row per shard).
 
 Owns the "## 20." section of EXPERIMENTS.md (same splice protocol as
 bench_variance / components_scale).
@@ -35,57 +35,38 @@ L = 512
 SHARDS = 8
 
 
-def _batch(spark, batch_ix: int, docs_per_batch: int, with_toks: bool):
+def _batch(spark, batch_ix: int, docs_per_batch: int):
     base = batch_ix * docs_per_batch
-    rows = spark.range(base, base + docs_per_batch).select(
+    return spark.range(base, base + docs_per_batch).select(
         F.col("id").alias("doc_id"),
         (F.col("id") % SHARDS).alias("shard"),
-        (F.pmod(F.col("id") * 37, F.lit(90)) + 10).alias("n_tokens"),
-    )
-    if not with_toks:
-        return rows
-    return rows.select(
-        "doc_id",
-        "shard",
         F.transform(
-            F.sequence(F.lit(1), F.col("n_tokens")),
-            lambda i: F.concat(F.lit("t"), F.col("doc_id"), F.lit("_"), i),
+            F.sequence(F.lit(1), F.pmod(F.col("id") * 37, F.lit(90)) + 10),
+            lambda i: F.concat(F.lit("t"), F.col("id"), F.lit("_"), i),
         ).alias("toks"),
     )
 
 
 def measure(spark, n_batches: int, docs_per_batch: int, tmp: Path):
-    from bigdatastructure_a5_spark.streaming.packing import (
-        assemble_batch,
-        pack_batch,
-    )
+    from bigdatastructure_a5_spark.streaming.packing import assemble_batch
 
-    results = {}
-    for name, fn, with_toks in (
-        ("pack_batch (geometry)", pack_batch, False),
-        ("assemble_batch (chunk text)", assemble_batch, True),
-    ):
-        state = str(tmp / f"state_{with_toks}")
-        out = str(tmp / f"out_{with_toks}")
-        walls = []
-        for i in range(n_batches):
-            b = _batch(spark, i, docs_per_batch, with_toks)
-            t0 = time.perf_counter()
-            if with_toks:
-                fn(spark, b, state, out, L, batch_id=i, toks_col="toks")
-            else:
-                fn(spark, b, state, out, L, batch_id=i)
-            walls.append(time.perf_counter() - t0)
-            if i % 10 == 0:
-                print(f"  {name} batch {i}: {walls[-1]:.2f}s")
-        early = statistics.median(walls[1:11])  # skip warm-up batch 0
-        late = statistics.median(walls[-10:])
-        state_files = sum(1 for _ in Path(state).rglob("*.parquet"))
-        state_bytes = sum(
-            p.stat().st_size for p in Path(state).rglob("*.parquet")
-        )
-        results[name] = (early, late, walls, state_files, state_bytes)
-    return results
+    name = "assemble_batch (chunk text)"
+    state, out = str(tmp / "state"), str(tmp / "out")
+    walls = []
+    for i in range(n_batches):
+        b = _batch(spark, i, docs_per_batch)
+        t0 = time.perf_counter()
+        assemble_batch(spark, b, state, out, L, batch_id=i)
+        walls.append(time.perf_counter() - t0)
+        if i % 10 == 0:
+            print(f"  {name} batch {i}: {walls[-1]:.2f}s")
+    early = statistics.median(walls[1:11])  # skip warm-up batch 0
+    late = statistics.median(walls[-10:])
+    state_files = sum(1 for _ in Path(state).rglob("*.parquet"))
+    state_bytes = sum(
+        p.stat().st_size for p in Path(state).rglob("*.parquet")
+    )
+    return {name: (early, late, walls, state_files, state_bytes)}
 
 
 def main() -> None:
@@ -99,6 +80,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     with tempfile.TemporaryDirectory(prefix="streampack_") as tmp:
         results = measure(spark, n_batches, docs_per_batch, Path(tmp))
+    cores = spark.sparkContext.defaultParallelism
 
     rows = []
     for name, (early, late, walls, files, nbytes) in results.items():
@@ -113,15 +95,16 @@ def main() -> None:
         [
             SECTION,
             "",
-            "`tools/streampack_scale.py`: the parquet state stores behind",
-            "streaming/packing.py are append-only — batch N's",
-            "read_carry/read_tails scan N-1 earlier row-sets — so the",
-            "per-batch cost carries a term linear in BATCH COUNT (never",
-            "in corpus size: the carry is one bigint and the tail",
-            f"< L tokens per shard regardless of history).  {n_batches}",
+            "`tools/streampack_scale.py`: the one parquet state store",
+            "behind streaming/packing.py is append-only — each batch",
+            "appends one state file, and batch N's read_state scans N-1",
+            "earlier row-sets — so the per-batch cost carries a term",
+            "linear in BATCH COUNT (never in corpus size: the state is",
+            "one packed total and a tail of < L tokens per shard",
+            f"regardless of history).  {n_batches}",
             f"constant-size batches ({docs_per_batch:,} docs x {SHARDS}",
-            f"shards, L={L}); early = median wall of batches 1-10, late =",
-            "median of the last 10.",
+            f"shards, L={L}, {cores} local cores); early = median wall",
+            "of batches 1-10, late = median of the last 10.",
             "",
             "| stage | stream | early s/batch | late s/batch | "
             "late/early | state files | state size |",
@@ -132,7 +115,7 @@ def main() -> None:
             "depth — driven by parquet FILE COUNT (one footer per",
             "append), not data volume.  At production cadence",
             "(thousands of batches) the deployment answer is periodic",
-            "carry/tail COMPACTION — implemented as",
+            "state COMPACTION — implemented as",
             "``streaming/packing.compact_state``: rows with batch_id < N",
             "rewrite to one sentinel row per shard (batch_id -1 sorts",
             "strictly earlier than every real batch, so the",
@@ -141,8 +124,8 @@ def main() -> None:
             "concurrent append).  Pytest pins stream-across-compaction",
             "output identical to the uncompacted run, retry included.",
             "Until the file count is thousands, the tax is milliseconds;",
-            "the chunk/geometry OUTPUT path is append-only parquet either",
-            "way and never re-read by the packer.",
+            "the chunk OUTPUT path is append-only parquet either way",
+            "and never re-read by the assembler.",
         ]
     )
     path = REPO / "EXPERIMENTS.md"
